@@ -6,7 +6,7 @@
 # boundaries, signed-zero epsilons, tie collisions) surface here.
 # Plain `test` runs everything at sf0.001.
 
-.PHONY: test verify-driver verify-sf01 bench bench-commit operators
+.PHONY: test verify-driver verify-sf01 bench bench-commit operators perfbench-test perfbench
 
 test:
 	python -m pytest tests/ -q
@@ -29,3 +29,11 @@ bench-commit:
 
 operators:
 	python -m azure_batch_map_reduce_spark.registry
+
+# Layer-resolved benchmark (perfbench/README.md): its own unit tests, and
+# one traced run of the literal map→reduce workload.
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
+
+perfbench:
+	python3 perfbench/run.py --workload mapreduce_files --seed 1 --seconds 8 --trace 1

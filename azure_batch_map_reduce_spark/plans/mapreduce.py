@@ -9,10 +9,14 @@ the DAG (``Program.cs:306,355``). Differences by design:
 - Staging (upload/SAS/rename — ``Program.cs:248-290,339-345``) is gone:
   Spark reads files in place and the shuffle service materializes the
   map→reduce edge.
-- Failure semantics are *stronger*: the reference only detects failures
-  after completion (``Program.cs:435-456``, no retry — the reducer can
-  silently consume partial inputs); here a failed task is retried
-  ``spark.task.maxFailures`` times and then fails the job.
+- Failure semantics: a map command that exits nonzero does *not* fail
+  its task — the exit code is carried in-band in ``exit_code``, the
+  reducer still receives that output, and callers filter on
+  ``exit_code`` (the reference likewise only inspects exit codes after
+  completion, ``Program.cs:427-429,435-456``). What *is* stronger is
+  infrastructure failure: a task that crashes (worker lost, command
+  timeout, Python error) is retried ``spark.task.maxFailures`` times and
+  then fails the job, so the reducer never runs on a partial gather.
 - The timeout+terminate monitor (``Program.cs:397-465``) maps to a
   driver-side timer + ``cancelJobGroup`` (:func:`run_with_timeout`).
 
@@ -149,8 +153,11 @@ def map_files(
                 rows, columns=["task_id", "src_path", "output_name", "content", "exit_code"]
             )
 
-    # One input file is one row; Spark schedules rows across executors —
-    # the per-file task fan-out of Program.cs:332-335 without per-file RPC.
+    # One input file is one row, and `run` makes one command invocation
+    # per row (Program.cs:332-335). Tasks are binaryFile splits: files are
+    # bin-packed up to spark.sql.files.maxPartitionBytes, each counting at
+    # least spark.sql.files.openCostInBytes, so small files share a task
+    # and a split's files run one after another inside it.
     return files.select("path", "content").mapInPandas(run, MAP_OUTPUT_SCHEMA)
 
 
@@ -161,9 +168,23 @@ def gather_reduce(
     output_pattern: str | None = None,
 ) -> DataFrame:
     """L7+L8+L9: barrier on all map tasks, gather every map output, run
-    ONE consolidation (``Program.cs:351-384``). ``coalesce(1)`` after the
-    map stage gives the all-upstream barrier + single-consumer layout the
-    reference builds with DependsOn + SAS-spliced ResourceFiles.
+    ONE consolidation (``Program.cs:351-384``).
+
+    The barrier is the shuffle: ``repartition(1)`` plans an
+    ``Exchange SinglePartition`` between the map stage and the reducer,
+    so the map stage keeps ``map_outputs``' own fan-out (one task per
+    binaryFile split, run in parallel) and the single reduce task starts
+    only after every map task has written its output — the reference's
+    reducer ``DependsOn`` every mapper (``Program.cs:355``). A
+    ``coalesce(1)`` would not be a barrier: it is a narrow dependency,
+    so it folds the whole map stage into the reducer's one task and runs
+    every map invocation serially. Shuffle arrival order is not
+    deterministic, so the reducer sorts what it gathers by output name.
+
+    Output names must be unique across the gather: task ids are file
+    stems, so ``a.txt`` and ``a.md`` both map to ``a.…``. A collision
+    raises ``ValueError`` naming both source files before the reducer
+    runs, rather than letting one output overwrite the other.
 
     At 100 TB a single reducer is the bottleneck by definition — prefer
     an aggregation (partial+final) when the consolidation is associative;
@@ -172,9 +193,16 @@ def gather_reduce(
         raise ValueError("exactly one of reduce_cmd / reduce_fn is required")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        sources: dict[str, str] = {}
         gathered: list[tuple[str, bytes]] = []
         for pdf in batches:
-            for name, content in zip(pdf["output_name"], pdf["content"]):
+            for src, name, content in zip(pdf["src_path"], pdf["output_name"], pdf["content"]):
+                if name in sources:
+                    raise ValueError(
+                        f"map output name collision: {name!r} is produced by "
+                        f"both {sources[name]!r} and {src!r}"
+                    )
+                sources[name] = src
                 gathered.append((name, bytes(content)))
         gathered.sort()
         if reduce_fn is not None:
@@ -207,7 +235,7 @@ def gather_reduce(
         finally:
             shutil.rmtree(workdir, ignore_errors=True)
 
-    return map_outputs.coalesce(1).mapInPandas(run, MAP_OUTPUT_SCHEMA)
+    return map_outputs.repartition(1).mapInPandas(run, MAP_OUTPUT_SCHEMA)
 
 
 def pipe_lines(df: DataFrame, cmd: str, column: str = "value") -> DataFrame:

@@ -170,3 +170,77 @@ def test_progress_monitor_observes_stages(spark, sf_dir):
     assert mon.snapshots, "monitor saw no active stages"
     sid, n_tasks, n_active, n_done = mon.snapshots[0]
     assert n_tasks > 0 and 0 <= n_done <= n_tasks
+
+
+def test_colliding_map_outputs_raise_before_reduce(spark, tmp_path):
+    # Task ids are file stems, so a.txt and a.md both yield a.stdout;
+    # one would silently overwrite the other in the reducer's workdir.
+    d = tmp_path / "collide"
+    d.mkdir()
+    (d / "a.txt").write_text("one two three\n")
+    (d / "a.md").write_text("four five\n")
+    marker = tmp_path / "reducer-ran"
+    mapped = map_files(spark, str(d), map_cmd="wc -w")
+    for kwargs in (
+        {"reduce_cmd": f"touch {marker}"},
+        {"reduce_fn": lambda outs: marker.write_text("ran") or b""},
+    ):
+        with pytest.raises(Exception) as exc:
+            gather_reduce(mapped, **kwargs).collect()
+        msg = str(exc.value)
+        assert "map output name collision: 'a.stdout'" in msg
+        assert "a.txt" in msg and "a.md" in msg
+        assert not marker.exists()
+
+
+def test_gather_reduce_keeps_map_fan_out(spark, tmp_path):
+    # The map→reduce barrier is a shuffle, so the map stage runs with
+    # map_files' own task count instead of folding into the reducer's
+    # single task.
+    d = tmp_path / "many"
+    d.mkdir()
+    for i in range(12):
+        (d / f"f{i:02d}.txt").write_text("w " * (i + 1) + "\n")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def first_stage_tasks(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            result = action()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = tracker.getJobIdsForGroup(group)
+        first = min(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+        return tracker.getStageInfo(first).numTasks, result
+
+    mapped = map_files(spark, str(d), map_cmd="wc -w")
+    map_only, _ = first_stage_tasks("fanout-map-only", mapped.count)
+    gathered, rows = first_stage_tasks(
+        "fanout-gather", gather_reduce(mapped, reduce_cmd="cat *.stdout").collect
+    )
+    assert gathered == map_only
+    if sc.defaultParallelism >= 2:
+        # Each tiny file costs openCostInBytes, so 12 files split across
+        # several binaryFile partitions.
+        assert map_only > 1
+    total = sum(int(line.split()[0]) for line in bytes(rows[0]["content"]).splitlines())
+    assert total == sum(range(1, 13))
+
+
+def test_empty_input_runs_reducer_once(spark, tmp_path):
+    # No matching input files: zero mappers, and the reducer still runs
+    # exactly once over nothing (Program.cs:332,355).
+    d = tmp_path / "empty"
+    d.mkdir()
+    (d / ".keep").write_text("")
+    mapped = map_files(spark, str(d), map_cmd="wc -w", glob="*.txt")
+    by_cmd = gather_reduce(mapped, reduce_cmd="ls | wc -l").collect()
+    assert len(by_cmd) == 1
+    assert by_cmd[0]["exit_code"] == 0
+    assert int(bytes(by_cmd[0]["content"])) == 0
+    by_fn = gather_reduce(
+        mapped, reduce_fn=lambda outs: str(len(outs)).encode()
+    ).collect()
+    assert len(by_fn) == 1
+    assert bytes(by_fn[0]["content"]) == b"0"
