@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import glob as globmod
 import os
+import shlex
 import shutil
 import subprocess
 import tempfile
@@ -90,14 +91,16 @@ def _run_cmd_on_file(
 ) -> tuple[list[tuple[str, bytes]], int]:
     """Materialize one file in a scratch dir, run ``cmd <path>`` (argv
     append, ``Program.cs:335``), capture stdout or glob-matched outputs
-    (``App.config:19`` semantics)."""
+    (``App.config:19`` semantics). The path is shell-quoted: it is one
+    argument whatever the file name holds (spaces, ``;``), never shell
+    text."""
     workdir = tempfile.mkdtemp(prefix="abmr-map-")
     try:
         local = os.path.join(workdir, os.path.basename(path))
         with open(local, "wb") as f:
             f.write(content)
         proc = subprocess.run(
-            f"{cmd} {local}",
+            f"{cmd} {shlex.quote(local)}",
             shell=True,
             cwd=workdir,
             capture_output=True,

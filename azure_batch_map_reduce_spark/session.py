@@ -154,6 +154,17 @@ def get_spark(
         # Quieter, faster local runs.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback", "true")
+        # Python workers start from the engine's daemon: every task's
+        # setup_spark_files calls importlib.invalidate_caches(), which on
+        # CPython < 3.13 eagerly re-reads pyspark.zip and the py4j zip once
+        # per zipimporter (16 of them), 0.1-0.25 s of fixed cost per task.
+        # The daemon re-reads an archive only when its (mtime_ns, size)
+        # differs from the stamp of that importer's own last read (3.13
+        # is already lazy and is left alone). Workers must be able to
+        # import this package, as they already must for its UDFs, which
+        # cloudpickle sends by reference. Static conf: sessions built
+        # elsewhere (a caller's own getOrCreate) keep PySpark's daemon.
+        .config("spark.python.daemon.module", "azure_batch_map_reduce_spark.worker_daemon")
     )
     if dynamic_allocation:
         for k, v in autoscale_conf(max_executors=max_executors).items():

@@ -52,6 +52,19 @@ def test_map_files_cmd_argv_append(spark, input_dir):
     assert counts == {"a": 3, "b": 2, "c": 1}
 
 
+def test_map_files_cmd_quotes_file_path(spark, tmp_path):
+    # The appended path is one argument, never shell text: a space must
+    # not split it and a `;` must not start a second command.
+    d = tmp_path / "odd"
+    d.mkdir()
+    (d / "a b.txt").write_text("one two three\n")
+    (d / "c;d.txt").write_text("four five\n")
+    out = map_files(spark, str(d), map_cmd="wc -w", glob="*.txt").collect()
+    assert [r["exit_code"] for r in out] == [0, 0]
+    counts = {r["task_id"]: int(bytes(r["content"]).split()[0]) for r in out}
+    assert counts == {"a b": 3, "c;d": 2}
+
+
 def test_map_files_output_pattern_capture(spark, input_dir):
     # Mapper writes a declared output file; engine captures by glob and
     # renames to {task_id}.{name} (App.config:19 / Program.cs:341-344).
